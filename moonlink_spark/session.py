@@ -3,6 +3,10 @@
 Local sandbox runs on local[N]; the same config block is what we'd ship to a
 multi-executor cluster via spark-submit --py-files (AQE + skew-join splitting
 on, Arrow on for the vectorized UDF paths, modest shuffle partitions).
+Cores and driver memory default to the host's: every CPU this process may run
+on, and half of physical memory. Python workers fork from the
+``moonlink_spark.pyworker`` daemon, which needs the package on the workers'
+PYTHONPATH when it starts; ``spark.executorEnv.PYTHONPATH`` puts it there.
 """
 
 from __future__ import annotations
@@ -12,12 +16,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_host_memory() -> str:
+    """Half of the host's physical memory (MemTotal), as a JVM size string."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 2 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "moonlink_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # make the package importable in executor python workers regardless of
     # the driver's cwd — the local-mode equivalent of spark-submit --py-files
@@ -36,11 +46,11 @@ def get_spark(
         # workers never hold more than ~64MB of pixels at once
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _half_host_memory())
         .config("spark.ui.enabled", "false")
-        # concurrent compaction file-group jobs share the cluster fairly
-        .config("spark.scheduler.mode", "FAIR")
         .config("spark.executorEnv.PYTHONPATH", worker_pythonpath)
+        # workers skip re-reading unchanged zip/jar directories on every task
+        .config("spark.python.daemon.module", "moonlink_spark.pyworker")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
